@@ -84,6 +84,14 @@ class LineageLog:
                         out[rel] = -1
         return out
 
+    def read(self, stage: str) -> dict | None:
+        """One stage's last record, or None if it has none."""
+        path = os.path.join(self.dir, f"{stage}.json")
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
     def read_all(self) -> list[dict]:
         out = []
         for fn in sorted(os.listdir(self.dir)):

@@ -8,15 +8,20 @@ on resume, so a killed run re-executes only the missing suffix of the DAG.
 Stage graph:
 
     pages ──extract──> extracted ──sentences──> sentences ─┐
-    kb_pages ──kb──> kb_sentences, postings, docs          ├─ mentions ──> triples
+    kb_pages ──kb──> kb_sentences                          ├─ mentions ──> triples
     redirects ──canon──> canonical (alias_norm->entity)  ──┘
+    kb_sentences ──index──> postings, docs ──> retrievals, retrievals2 (optional)
     model_predictions ──ensemble──> ensembled (optional input)
+
+The index stage commits the BM25 index once per run; both retrieval rounds
+read the committed tables, so the term explode + groupBy runs once.
 
 Run via  spark-submit --py-files kgner.zip -m kgner.run  (kgner/run.py).
 """
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +29,9 @@ from pyspark.sql import functions as F
 
 from kgner import io
 from kgner.lineage import LineageLog
+
+# the committed BM25 index: one table per kb_index output
+INDEX_TABLES = ("postings", "docs")
 
 
 @dataclass
@@ -125,6 +133,9 @@ class Pipeline:
         # (stage skipped on resume / salt_buckets == 0 leaves it None)
         self.salt_engaged: bool | None = None
         self.salt_share: float | None = None  # measured hot-domain share
+        # (postings, docs) readers once stage_index has built or reused the
+        # committed index; both rounds share them
+        self._index: tuple[DataFrame, DataFrame] | None = None
 
     # -- stage helpers ------------------------------------------------------
     def _done(self, name: str) -> bool:
@@ -264,19 +275,54 @@ class Pipeline:
             inputs=("sentences", "canonical"),
         )
 
-    def _retrieval_inputs(self):
-        """Shared setup for both retrieval rounds: (queries, postings, docs).
-        One definition so the two stages can't drift, and the plans are
-        identical (Spark reuses the exchange when both run in one job)."""
-        from kgner.operators.kbbuild import kb_index
+    def _index_config(self) -> dict:
+        """The analyzer settings the index is built with. Stored in the
+        postings/docs lineage extras: a committed index whose extras differ
+        from these is rebuilt, never read."""
+        lex = self.cfg.zh_lexicon
+        return {
+            "per_lang_analyzer": self.cfg.per_lang_analyzer,
+            "zh_dict_mode": self.cfg.zh_dict_mode,
+            "zh_lexicon_sha256": hashlib.sha256(
+                "\n".join(lex).encode("utf-8")
+            ).hexdigest() if lex else None,
+        }
 
-        kb_sents = self._read("kb_sentences")
-        postings, docs = kb_index(
-            kb_sents,
-            per_lang_analyzer=self.cfg.per_lang_analyzer,
-            zh_lexicon=self.cfg.zh_lexicon,
-            zh_dict_mode=self.cfg.zh_dict_mode,
-        )
+    def stage_index(self) -> None:
+        """BM25 index over kb_sentences, committed as two tables (postings,
+        docs) that both retrieval rounds read — the reference's one ES index
+        built by kb/build_kb.py and queried by every round. Runs at most
+        once per Pipeline: the first retrieval stage calls it, a later one
+        finds it done without counting a resume skip. An index committed by
+        an earlier run is reused (a resume skip) only if its lineage extras
+        match _index_config(); otherwise it is rebuilt."""
+        if self._index is not None:
+            return
+        extras = self._index_config()
+        if all(
+            self._done(t) and (self.lineage.read(t) or {}).get("extras") == extras
+            for t in INDEX_TABLES
+        ):
+            self.skipped.extend(INDEX_TABLES)
+        else:
+            from kgner.operators.kbbuild import kb_index
+
+            tables = kb_index(
+                self._read("kb_sentences"),
+                per_lang_analyzer=self.cfg.per_lang_analyzer,
+                zh_lexicon=self.cfg.zh_lexicon,
+                zh_dict_mode=self.cfg.zh_dict_mode,
+            )
+            for name, df in zip(INDEX_TABLES, tables):
+                self._write(name, df, inputs=("kb_sentences",), extras=extras)
+        self._index = tuple(self._read(t) for t in INDEX_TABLES)
+
+    def _retrieval_inputs(self, *query_cols: str):
+        """Shared setup for both retrieval rounds: (queries, postings, docs).
+        postings and docs read the committed index (built here on first
+        use), so no round re-derives it. queries is (query_id, [lang,]
+        tokens, *query_cols): one projection of the sentences table."""
+        self.stage_index()
         sents = self._read("sentences")
         # same NULL-lang sentinel as kb_index (shared UND_LANG constant):
         # un-identified sentences query the unknown-language index rather
@@ -317,8 +363,9 @@ class Pipeline:
             F.xxhash64("url", "sent_id").alias("query_id"),
             *lang_cols,
             F.transform(qtok, lambda t: F.lower(t)).alias("tokens"),
+            *query_cols,
         )
-        return queries, postings, docs
+        return (queries, *self._index)
 
     def _bm25_kwargs(self) -> dict:
         """Retrieval knobs shared by both rounds: per-language index scoping
@@ -337,20 +384,16 @@ class Pipeline:
         from kgner.operators.context import assemble_context
         from kgner.operators.retrieval import bm25_topk
 
-        queries, postings, docs = self._retrieval_inputs()
-        sents = self._read("sentences")
+        # the query text rides in the query projection: no queries ⋈
+        # sentences shuffle join to get it back for context assembly
+        queries, postings, docs = self._retrieval_inputs("sentence")
         retr = bm25_topk(queries, postings, docs, k=10, **self._bm25_kwargs())
         aug = assemble_context(
-            queries.join(
-                sents.select(
-                    F.xxhash64("url", "sent_id").alias("query_id"), "sentence"
-                ),
-                "query_id",
-            ).select("query_id", "sentence"),
+            queries.select("query_id", "sentence"),
             retr.select("query_id", "rank", "sentence"),
             budget=510,
         )
-        self._write("retrievals", aug, inputs=("sentences", "kb_sentences"))
+        self._write("retrievals", aug, inputs=("sentences", *INDEX_TABLES))
 
     def stage_retrievals2(self) -> None:
         """Optional second retrieval round (SURVEY §3.3 / README.md:83-88):
@@ -376,7 +419,7 @@ class Pipeline:
                 boost_entities=boosts,
                 **self._bm25_kwargs(),
             ),
-            inputs=("sentences", "kb_sentences", "mentions"),
+            inputs=("sentences", *INDEX_TABLES, "mentions"),
         )
 
     def stage_ensemble(self) -> None:
@@ -437,16 +480,20 @@ class Pipeline:
     def run(self) -> DataFrame:
         """Run the configured stages in dependency order.
 
-        cfg.stages selects WHICH stages run ("retrievals"/"ensembled" are the
-        optional ones; the default list is the core path). Dependencies are
-        not auto-added: selecting a stage whose upstream table is neither
-        selected nor already committed fails at read time — intentional, so a
-        resume never silently recomputes an upstream with different inputs.
+        cfg.stages selects WHICH stages run ("index", "retrievals",
+        "retrievals2" and "ensembled" are the optional ones; the default list
+        is the core path). One dependency is added automatically: the
+        retrieval stages build the index (postings, docs) when it is not
+        committed or was built with another analyzer config. No other is:
+        selecting a stage whose upstream table is neither selected nor
+        already committed fails at read time — intentional, so a resume
+        never silently recomputes an upstream with different inputs.
         """
         order = [
             ("extracted", self.stage_extracted),
             ("sentences", self.stage_sentences),
             ("kb_sentences", self.stage_kb),
+            ("index", self.stage_index),
             ("canonical", self.stage_canonical),
             ("mentions", self.stage_mentions),
             ("retrievals", self.stage_retrievals),

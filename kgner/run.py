@@ -32,7 +32,9 @@ def main() -> None:
         "--stages",
         default=None,
         help="comma list of stages to run (default: the core path; "
-        "add retrievals/retrievals2 for the context/iterative rounds)",
+        "add retrievals/retrievals2 for the context/iterative rounds, which "
+        "build the index stage (postings, docs) themselves when it is not "
+        "committed; add index to build it alone)",
     )
     ap.add_argument("--max-text-chars", type=int, default=None)
     args = ap.parse_args()
@@ -60,7 +62,7 @@ def main() -> None:
     if args.stages:
         cfg.stages = [s.strip() for s in args.stages.split(",") if s.strip()]
     valid = {
-        "extracted", "sentences", "kb_sentences", "canonical",
+        "extracted", "sentences", "kb_sentences", "index", "canonical",
         "mentions", "retrievals", "retrievals2", "ensembled", "triples",
     }
     unknown = set(cfg.stages) - valid

@@ -2,6 +2,9 @@
 visible in the plan — filters pushed to the scan, dimensions broadcast, no
 sort-merge joins in the retrieval path, no Python in JVM-only operators."""
 
+import os
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -124,3 +127,43 @@ def test_minhash_contract_is_jvm_only(spark):
 
     plan = _plan(QUERIES["minhash_lsh"](spark, SF))
     assert "Python" not in plan
+
+
+def test_retrieval_round2_reads_committed_index(spark, tmp_path):
+    """Round 2 scans the committed postings/docs tables and never re-derives
+    the index: no scan of kb_sentences, no explode over sentence text."""
+    from kgner.fixtures import build_fixtures, to_spark
+    from kgner.pipeline import Pipeline, PipelineConfig
+
+    t = to_spark(spark, build_fixtures(n_entities=10, n_pages=10, giant_pages=0))
+    wd = str(tmp_path / "wd")
+    cfg = PipelineConfig(
+        workdir=wd,
+        stages=["extracted", "sentences", "kb_sentences", "canonical",
+                "mentions", "retrievals", "retrievals2"],
+    )
+    pipe = Pipeline(spark, cfg, t["pages"], t["kb_pages"], t["redirects"])
+    written = {}
+    write = pipe._write
+
+    def spy(name, df, *args, **kwargs):
+        written[name] = df
+        write(name, df, *args, **kwargs)
+
+    pipe._write = spy
+    pipe.run()
+    # scan locations print in full only under a long metadata limit
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        plan = _plan(written["retrievals2"])
+    finally:
+        spark.conf.set(key, old)
+    scanned = {
+        os.path.basename(p.rstrip("/"))
+        for p in re.findall(r"InMemoryFileIndex\(\d+ paths\)\[file:([^\],]+)", plan)
+    }
+    assert "postings" in scanned and "docs" in scanned, scanned
+    assert "kb_sentences" not in scanned, scanned
+    assert not re.search(r"Generate explode\([^\n]*sentence", plan)
