@@ -56,9 +56,10 @@ def connected_components(edges: list[tuple[str, str]]) -> dict[str, str]:
     """Union-find CC over an undirected edge list -> {node: representative}.
 
     Representative = lexicographic min of the component (deterministic).
-    Oracle-side counterpart of the Spark iterative min-label propagation in
-    kgner.operators.canonicalize.
+    Oracle-side counterpart of kgner.operators.canonicalize; like it,
+    ignores edges with a None endpoint.
     """
+    edges = [(a, b) for a, b in edges if a is not None and b is not None]
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:

@@ -49,7 +49,13 @@ def connected_components(
     of node text per edge (256 MB / (1.25 x (98 B overhead + chars)));
     dedup_keep_min's 20-char encoded ids cap at ~1.8M edges — the caps are
     deliberately the same order so neither silently dominates.
+
+    Edges with a null endpoint (e.g. a redirect with no target) are dropped
+    before either path runs, so both paths see the same graph. The local
+    result is handed to Spark as an Arrow table: its scans stay in the JVM
+    instead of starting Python workers as a list-built DataFrame would.
     """
+    edges = _non_null(edges)
     PROBE = 1024
     probe = [
         (r[0], r[1]) for r in edges.select("src", "dst").limit(PROBE).collect()
@@ -71,15 +77,23 @@ def connected_components(
             return _cc_distributed(edges, max_iters)
     from kgner.linkops import connected_components as uf
 
-    comp = uf(rows)
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        sorted(comp.items()), "node string, component string"
+    import pyarrow as pa
+
+    nodes = sorted(uf(rows).items())
+    table = pa.table(
+        [[n for n, _ in nodes], [c for _, c in nodes]],
+        schema=pa.schema([("node", pa.string()), ("component", pa.string())]),
     )
+    return edges.sparkSession.createDataFrame(table)
+
+
+def _non_null(edges: DataFrame) -> DataFrame:
+    return edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
 
 def _cc_distributed(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     """Distributed min-label propagation (used above local_threshold)."""
+    edges = _non_null(edges)
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

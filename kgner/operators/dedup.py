@@ -46,15 +46,23 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _shingle_arr(text_col: str, n: int):
-    """Column expr: the doc's DISTINCT word-n-gram shingle array.
+def _tokens(text_col: str):
+    """Column expr: the doc's word tokens, from ONE regex pass (split on \\s+
+    after a space-only trim) — the DuckDB oracles replay this exact form,
+    including the '' edge tokens that text with leading/trailing non-space
+    whitespace produces."""
+    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
 
-    Tokenizes with ONE regex pass (split on \\s+ after a space-only trim)
-    — the DuckDB oracles replay this exact form (including the '' edge
-    tokens text with leading/trailing non-space whitespace produces), and
-    it skips the old regexp_replace normalize pass over the full text
-    (~25% of shingling cost at sf0.1)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+
+def _shingle_arr(toks, n: int):
+    """Column expr: the DISTINCT word-n-gram shingle array of the token
+    array column `toks`.
+
+    `toks` must be a projected column, not the split expression itself:
+    higher-order-function lambdas run interpreted, so a split captured in
+    the lambda would re-tokenize the whole text once per shingle (O(tokens^2)
+    per doc). Referenced more than once, the projected split is not inlined
+    back by the optimizer."""
     return F.when(
         F.size(toks) < n, F.array(F.concat_ws(" ", toks))
     ).otherwise(
@@ -74,14 +82,17 @@ def shingle_arrays(
     doc — the compact form consumers cache: re-exploding a cached array
     column is pure row expansion, while caching the exploded rows pays
     per-row overhead on millions of rows (measured ~7 s vs ~1 s for the 5.2M
-    shingles of the sf1.0 bench corpus)."""
+    shingles of the sf1.0 bench corpus).
+
+    Each doc is tokenized once: the token array is projected as a column and
+    the shingles are sliced from it, so the build is linear in tokens."""
     from kgner.operators.partitioning import spread_scan
 
     # single-file inputs would run the whole explosion on 1-2 cores (§2.5)
     docs = spread_scan(docs, id_col)
     return docs.select(
-        F.col(id_col).alias("doc_id"), _shingle_arr(text_col, n).alias("arr0")
-    )
+        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("toks")
+    ).select("doc_id", _shingle_arr(F.col("toks"), n).alias("arr0"))
 
 
 def shingle_df(
@@ -325,23 +336,18 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         docs, num_hashes, n, id_col, text_col, hash_fn, base_fn, perm_fn
     )
-    band_cols = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col("sig").getItem(bi * rows + ri).cast("string")
-                                for ri in range(rows)
-                            ],
-                        )
-                    ).alias("bucket"),
+    # One SQL expression for all band keys: composing it from Column calls
+    # costs ~2k driver round trips per plan build.
+    band_cols = F.expr(
+        "explode(array({}))".format(
+            ", ".join(
+                f"named_struct('band', {bi}, 'bucket', xxhash64(concat_ws(',', "
+                + ", ".join(
+                    f"CAST(sig[{bi * rows + ri}] AS STRING)" for ri in range(rows)
                 )
+                + ")))"
                 for bi in range(bands)
-            ]
+            )
         )
     )
     banded = (
@@ -397,9 +403,10 @@ def simhash(
 ) -> DataFrame:
     """-> (doc_id, simhash bigint): 64-bit simhash over word unigrams.
 
-    Bit j of simhash = majority vote of bit j over token hashes. JVM-side:
-    explode tokens, per-doc sum of (2*bit-1) per bit position via one groupBy
-    with 64 conditional sums — no UDF. hash_fn must return a LONG column
+    Bit j of simhash = majority vote of bit j over token hashes (set iff
+    strictly more than half the tokens have it). JVM-side: explode tokens,
+    then one groupBy with 32 packed bit counts — no UDF. hash_fn is applied
+    as a Column and must return a LONG column
     (default xxhash64; kgner.functions.hashing.stable_hash64_col for the
     oracle-reproducible md5 variant).
     """
@@ -411,7 +418,7 @@ def simhash(
     docs = spread_scan(docs, id_col)
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(_tokens(text_col)).alias("tok"),
     ).withColumn("h", hash_fn(F.col("tok")))
     # Packed bit-count aggregation (guide §1.2 "per-task work"): bit j's
     # majority vote needs only s_j = count of tokens with bit j set, since
@@ -419,27 +426,18 @@ def simhash(
     # accumulates s_j (low lane) and s_{j+32} (high lane) in one long — 32
     # aggregate expressions instead of 64, exact integer arithmetic, no
     # lane overflow below 2^32 tokens per doc.
-    mask = F.lit(0x0000000100000001)
-    sums = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.shiftrightunsigned(F.col("h"), j).bitwiseAND(mask)).alias(
-                f"p{j}"
-            )
-            for j in range(32)
-        ],
-    )
-    n = F.col("n")
-    acc = F.lit(0).cast("long")
+    # Sums and vote are ONE SQL aggregate expression: built from Column calls
+    # they cost ~10k driver round trips per plan build. Each sum appears in
+    # two vote terms; the planner computes identical aggregates once.
+    terms = []
     for j in range(32):
-        lo = F.col(f"p{j}").bitwiseAND(F.lit(0xFFFFFFFF))
-        hi = F.shiftrightunsigned(F.col(f"p{j}"), 32)
-        acc = acc + F.when(
-            lo * 2 > n, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long")) + F.when(
-            hi * 2 > n, F.shiftleft(F.lit(1).cast("long"), j + 32)
-        ).otherwise(F.lit(0).cast("long"))
-    return sums.select("doc_id", acc.alias("simhash"))
+        p = f"sum(shiftrightunsigned(h, {j}) & {0x0000000100000001}L)"
+        terms.append(f"IF(({p} & {0xFFFFFFFF}L) * 2 > count(1), shiftleft(1L, {j}), 0L)")
+        terms.append(
+            f"IF(shiftrightunsigned({p}, 32) * 2 > count(1), shiftleft(1L, {j + 32}), 0L)"
+        )
+    vote = F.expr("0L + " + " + ".join(terms))
+    return toks.groupBy("doc_id").agg(vote.alias("simhash"))
 
 
 def simhash_near_pairs(

@@ -33,7 +33,9 @@ SPREAD_MULT = 2
 # exchange; at sf1.0-and-up the guard passes and the exchange wins 6x).
 # Heavy per-row operators (shingle/n-gram HOF builds, simhash bit folds)
 # must NOT use this floor — their work-per-byte amortizes the exchange even
-# at tiny scale (ngram at sf0.1: 3.2 s with spread vs 5.2 s without).
+# at tiny scale (ngram at sf0.1: 3.2 s with spread vs 5.2 s without,
+# measured with the quadratic shingle expression that re-split the text once
+# per shingle).
 SPREAD_MIN_BYTES_PER_CORE = 32 << 10
 
 

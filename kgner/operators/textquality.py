@@ -111,10 +111,18 @@ def fingerprint(df: DataFrame, text_col: str = "text", chunk: int = 64) -> DataF
     `chunk_fps` (rolling per-`chunk`-token hashes, for partial-overlap
     detection)."""
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    toks = F.split(norm, " ")
+    # the tokens are projected once: a split captured in the chunk lambda
+    # would re-split the whole text per chunk (lambdas run interpreted)
+    tmp = "__fingerprint_toks"
+    toks = F.col(tmp)
     n_chunks = F.ceil(F.size(toks) / F.lit(chunk)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
         lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i * chunk + 1, chunk))),
     )
-    return df.withColumn("doc_fp", F.xxhash64(norm)).withColumn("chunk_fps", chunks)
+    return (
+        df.withColumn("doc_fp", F.xxhash64(norm))
+        .withColumn(tmp, F.split(norm, " "))
+        .withColumn("chunk_fps", chunks)
+        .drop(tmp)
+    )

@@ -141,6 +141,43 @@ def test_lang_id_and_quality(spark):
     assert tc[0]["bpe_tokens"] >= tc[0]["ws_tokens"]
 
 
+
+def _py_simhash(text: str) -> int:
+    """Pure-Python simhash over the operator's tokens (space-only trim,
+    lowercase, split on whitespace runs): bit j set iff strictly more than
+    half the token hashes have it."""
+    import re
+
+    from kgner.textops import stable_hash64
+
+    hs = [stable_hash64(t) % (1 << 64) for t in re.split(r"\s+", text.strip(" ").lower())]
+    v = sum(1 << j for j in range(64) if 2 * sum(h >> j & 1 for h in hs) > len(hs))
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_simhash_values_match_majority_vote(spark):
+    from kgner.functions.hashing import stable_hash64_col
+    from kgner.operators.dedup import simhash
+    from kgner.textops import stable_hash64
+
+    high = next(f"t{i}" for i in range(100) if stable_hash64(f"t{i}") < 0)
+    a, b = "alpha", "beta"
+    assert stable_hash64(a) != stable_hash64(b)
+    rows = [
+        (0, high),  # one token with bit 63 set: simhash is its hash
+        (1, ""),  # empty text is one '' token
+        (2, f"{a} {b}"),  # 1-1 ties on differing bits stay 0
+        (3, f"{a} {b} {a} {b} {high} gamma  delta"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in simhash(df, hash_fn=stable_hash64_col).collect()
+    }
+    assert got[0] == stable_hash64(high)
+    assert got[2] == stable_hash64(a) & stable_hash64(b)
+    assert got == {i: _py_simhash(t) for i, t in rows}
+
 def test_fingerprint_rolling(spark):
     from kgner.operators.textquality import fingerprint
 

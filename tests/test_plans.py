@@ -167,3 +167,70 @@ def test_retrieval_round2_reads_committed_index(spark, tmp_path):
     assert "postings" in scanned and "docs" in scanned, scanned
     assert "kb_sentences" not in scanned, scanned
     assert not re.search(r"Generate explode\([^\n]*sentence", plan)
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        i, depth = m.end(), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.end() : i - 1])
+    return bodies
+
+
+def test_tokenize_once_outside_lambdas(spark):
+    """Higher-order-function lambdas run interpreted: a split captured in
+    one re-tokenizes the whole text per element (O(tokens^2) per doc). The
+    shingle and chunk expressions must reference a projected token column."""
+    from kgner.operators.dedup import (
+        minhash_signatures,
+        ngram_jaccard_pairs,
+        shingle_arrays,
+    )
+    from kgner.operators.textquality import fingerprint
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    for name, df in [
+        ("shingle_arrays", shingle_arrays(docs)),
+        ("minhash_signatures", minhash_signatures(docs)),
+        ("ngram_jaccard_pairs", ngram_jaccard_pairs(docs)),
+        ("fingerprint", fingerprint(docs)),
+    ]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert not any("split(" in b for b in _lambda_bodies(plan)), name
+
+
+def test_local_cc_result_stays_in_jvm(spark):
+    """The driver-side union-find result must not be scanned through Python
+    workers (a list-built DataFrame is a PythonRDD, restarted per scan)."""
+    from kgner.operators.canonicalize import connected_components
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
+    )
+    comp = connected_components(edges)
+    lineage = comp._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert sorted(map(tuple, comp.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
+    ]
+
+
+def test_shingle_df_long_document(spark):
+    """A 3,000-token document yields exactly its distinct word 3-grams."""
+    import random
+
+    from kgner.operators.dedup import shingle_df
+    from kgner.textops import shingles
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]  # ~70 repeated 3-grams expected
+    toks = [rng.choice(vocab) for _ in range(3000)]
+    docs = spark.createDataFrame([(1, " ".join(toks))], "doc_id long, text string")
+    got = [r["shingle"] for r in shingle_df(docs, n=3).collect()]
+    assert len(got) == len(set(got))
+    assert sorted(got) == shingles(toks, 3)

@@ -298,6 +298,20 @@ def test_cc_wide_strings_fall_through_to_distributed(spark, monkeypatch):
     assert local.agg(F.countDistinct("component")).collect()[0][0] == 50
 
 
+
+def test_cc_null_endpoints_dropped_on_both_paths(spark):
+    """A redirect with no target must neither crash the local union-find nor
+    add a node on the distributed path: both give the same map."""
+    import kgner.operators.canonicalize as canon
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", None), (None, "c"), ("c", "d"), (None, None)],
+        "src string, dst string",
+    )
+    local = sorted(map(tuple, canon.connected_components(edges).collect()))
+    dist = sorted(map(tuple, canon._cc_distributed(edges).collect()))
+    assert local == dist == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")]
+
 # --- IVF ANN --------------------------------------------------------------------
 
 def test_ivf_topk_duplicate_probe_recall(spark):
