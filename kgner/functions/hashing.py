@@ -36,13 +36,6 @@ def stable_hash64_col(c: Column) -> Column:
     )
 
 
-def stable_seeded_hash_fn(c: Column, seed: int) -> Column:
-    """Seeded unsigned variant for minhash permutation families:
-    h_seed(x) = stable_hash64_u(seed || ':' || x). Costs one md5 PER SEED —
-    prefer stable_affine_hash_fn, which derives every seed from one md5."""
-    return stable_hash64_u(F.concat(F.lit(f"{seed}:"), c))
-
-
 # Universal-hash permutation family over the Mersenne prime 2^61-1:
 # h_i(x) = (a_i * (md5_64(x) mod p) + b_i) mod p. ONE md5 per row (the base
 # is materialized as a column by callers); the affine step is exact integer

@@ -87,26 +87,6 @@ def split_sentences_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(_SENT_TYPE)
-def extract_sentences_udf(html: pd.Series, lang: pd.Series) -> pd.Series:
-    """Fused html -> sentence list (extract_text + split_sentences in ONE
-    Arrow round-trip). Semantically identical to
-    split_sentences_udf(extract_text_udf(html), lang) but avoids a second
-    Python eval node per task — one fewer worker process and one fewer
-    Arrow serialization of the full text column."""
-    return pd.Series(
-        [
-            [
-                {"offset": off, "sentence": s}
-                for off, s in textops.split_sentences_with_offsets(
-                    textops.extract_text(h or b""), lg or "en"
-                )
-            ]
-            for h, lg in zip(html, lang)
-        ]
-    )
-
-
 def tokens_col(sentence: Column) -> Column:
     """Whitespace tokenization, JVM-side (flair/data.py:411-428 semantics)."""
     return F.split(F.trim(sentence), r"\s+")
@@ -386,11 +366,6 @@ def subtoken_len_col(sentence: Column) -> Column:
     return F.size(F.regexp_extract_all(sentence, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def sentence_key_col(tokens: Column) -> Column:
-    """Lowercased ws-joined retrieval key (kb/context_process.py:188-211)."""
-    return F.lower(F.concat_ws(" ", tokens))
-
-
 def with_sentences(pages: DataFrame) -> DataFrame:
     """pages -> sentences(url, lang, sent_id, sentence, tokens, n_tokens,
     subtoken_len).
@@ -423,22 +398,3 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add a whitespace `tokens` column JVM-side."""
     return df.withColumn("tokens", tokens_col(F.col(text_col)))
 
-
-def pages_to_sentences(pages: DataFrame) -> DataFrame:
-    """pages(url, lang, html) -> sentences, via the fused extract+split UDF.
-
-    Same output as with_sentences(extract stage) — byte-identical text path —
-    with one Python eval node instead of two (the hot-path variant)."""
-    return (
-        pages.select(
-            "url",
-            "lang",
-            F.posexplode(
-                extract_sentences_udf(F.col("html"), F.col("lang"))
-            ).alias("sent_id", "s"),
-        )
-        .select("url", "lang", "sent_id", F.col("s.sentence").alias("sentence"))
-        .withColumn("tokens", tokens_col(F.col("sentence")))
-        .withColumn("n_tokens", F.size("tokens"))
-        .withColumn("subtoken_len", subtoken_len_col(F.col("sentence")))
-    )

@@ -14,14 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 def table_path(workdir: str, name: str) -> str:
     return os.path.join(workdir, name)
 

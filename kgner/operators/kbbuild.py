@@ -187,38 +187,6 @@ def kb_index(
     return postings, docs
 
 
-def write_postings_bucketed(
-    postings: DataFrame,
-    table_name: str = "kb_postings_bucketed",
-    n_buckets: int = 32,
-) -> None:
-    """Persist postings bucketed by `term` (the parquet/HMS stand-in for the
-    Iceberg `bucket(N, term)` partition transform in SURVEY §7.1).
-
-    A retrieval join against a term-bucketed postings table needs NO shuffle
-    on the postings side — only the (small) query-terms side redistributes.
-    At 10^12 docs the postings table is the big side, so this converts the
-    retrieval join's dominant shuffle into a bucket-local read.
-    """
-    spark = postings.sparkSession
-    # an in-memory catalog forgets tables across sessions but the warehouse
-    # directory survives — clear both so overwrite is idempotent
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    import shutil
-    from urllib.parse import urlparse
-
-    loc = urlparse(warehouse).path or warehouse
-    shutil.rmtree(f"{loc.rstrip('/')}/{table_name.lower()}", ignore_errors=True)
-    (
-        postings.write.mode("overwrite")
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def alias_edges(kb_pages: DataFrame, redirects: DataFrame) -> DataFrame:
     """Edge list (src, dst) of the alias graph: redirects + title self-loops.
 

@@ -10,26 +10,14 @@ same greedy longest-first semantics as the oracle (kgner.linkops).
 
 Scale notes: zero shuffle — the stage is map-only over sentences; the alias
 dict is broadcast once per executor (Spark broadcast, not per-task closure).
-For alias tables too large to broadcast (>~1-2 GB) the fallback is the
-explode + equi-join form in `mentions_by_join`, which Catalyst can still
-broadcast or shuffle-hash as stats dictate.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from kgner.linkops import build_alias_index, match_aliases
 
@@ -37,47 +25,31 @@ MENTIONS_SCHEMA = (
     "url string, sent_id int, start int, end int, text string, entity_id string"
 )
 
-_MENTION_PICK_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("text", StringType()),
-            StructField("entity_id", StringType()),
-        ]
+
+def _emit_mentions(rows: Iterable, idx, max_len: int) -> pd.DataFrame:
+    """(url, sent_id, tokens) rows -> one MENTIONS_SCHEMA frame: the
+    greedy longest-first gazetteer scan shared by both mention scans. A
+    null token array matches nothing, like an empty one."""
+    urls, sids, starts, ends, texts, ents = [], [], [], [], [], []
+    for url, sid, toks in rows:
+        toks = list(toks) if toks is not None else []
+        for s, e, canon in match_aliases(toks, idx, max_len):
+            urls.append(url)
+            sids.append(sid)
+            starts.append(s)
+            ends.append(e)
+            texts.append(" ".join(toks[s:e]))
+            ents.append(canon)
+    return pd.DataFrame(
+        {
+            "url": pd.Series(urls, dtype="object"),
+            "sent_id": pd.Series(sids, dtype="int32"),
+            "start": pd.Series(starts, dtype="int32"),
+            "end": pd.Series(ends, dtype="int32"),
+            "text": pd.Series(texts, dtype="object"),
+            "entity_id": pd.Series(ents, dtype="object"),
+        }
     )
-)
-
-
-@pandas_udf(_MENTION_PICK_TYPE)
-def _pick_mentions_udf(cands: pd.Series) -> pd.Series:
-    """Greedy longest-first-then-leftmost non-overlap pick over one
-    sentence's candidate array, batched across sentences per Arrow batch.
-    Occupancy is a boolean array, so accepting a candidate is an O(len)
-    slice op. Zero-width / negative spans are rejected up front — the
-    occupancy sweep assumes well-formed half-open spans (an empty slice
-    would be accepted unconditionally, a negative index would wrap); the
-    n-gram generator can only emit end = start + ln (ln >= 1, start >= 0),
-    so the guard pins the invariant for any other candidate source."""
-    import numpy as np
-
-    out = []
-    for c in cands:
-        c = sorted(
-            (d for d in (c if c is not None else [])
-             if d["start"] is not None and d["end"] is not None
-             and d["end"] > d["start"] >= 0),
-            key=lambda d: (d["start"] - d["end"], d["start"]),
-        )
-        occupied = np.zeros(max((d["end"] for d in c), default=0), dtype=bool)
-        kept = []
-        for d in c:
-            s, e = int(d["start"]), int(d["end"])
-            if not occupied[s:e].any():
-                occupied[s:e] = True
-                kept.append(d)
-        out.append(kept)
-    return pd.Series(out)
 
 
 def prepare_alias_broadcast(spark: SparkSession, aliases: DataFrame):
@@ -108,25 +80,8 @@ def detect_mentions(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx, ml = b_idx.value
         for pdf in batches:
-            urls, sids, starts, ends, texts, ents = [], [], [], [], [], []
-            for url, sid, toks in zip(pdf["url"], pdf["sent_id"], pdf["tokens"]):
-                toks = list(toks)
-                for s, e, canon in match_aliases(toks, idx, ml):
-                    urls.append(url)
-                    sids.append(sid)
-                    starts.append(s)
-                    ends.append(e)
-                    texts.append(" ".join(toks[s:e]))
-                    ents.append(canon)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "start": pd.Series(starts, dtype="int32"),
-                    "end": pd.Series(ends, dtype="int32"),
-                    "text": pd.Series(texts, dtype="object"),
-                    "entity_id": pd.Series(ents, dtype="object"),
-                }
+            yield _emit_mentions(
+                zip(pdf["url"], pdf["sent_id"], pdf["tokens"]), idx, ml
             )
 
     return sentences.select("url", "sent_id", "tokens").mapInPandas(
@@ -147,108 +102,24 @@ def detect_mentions_from_pages(
     mapInPandas, so the full sentences/tokens intermediate never crosses the
     JVM<->Arrow boundary. Identical output to
     detect_mentions(with_sentences(extracted)) — parity-tested — but one
-    worker process per task and ~3x less serialization. Use this when the
-    intermediate tables don't need to be materialized (the staged pipeline
-    keeps them for resume + the byte-identity checkpoint).
+    worker process per task and ~3x less serialization. `Pipeline` does not
+    use it: it keeps the intermediate tables for resume and the
+    byte-identity checkpoint. `bench.py` times this scan.
     """
     from kgner.textops import extract_text, split_sentences, tokenize
 
     b_idx = alias_broadcast or prepare_alias_broadcast(spark, aliases)
 
+    def sentence_rows(pdf: pd.DataFrame):
+        for url, lang, html in zip(pdf["url"], pdf["lang"], pdf["html"]):
+            text = extract_text(bytes(html) if html is not None else b"")
+            for sid, sent in enumerate(split_sentences(text, lang or "en")):
+                yield url, sid, tokenize(sent)
+
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx, ml = b_idx.value
         for pdf in batches:
-            urls, sids, starts, ends, texts, ents = [], [], [], [], [], []
-            for url, lang, html in zip(pdf["url"], pdf["lang"], pdf["html"]):
-                text = extract_text(bytes(html) if html is not None else b"")
-                for sid, sent in enumerate(split_sentences(text, lang or "en")):
-                    toks = tokenize(sent)
-                    for s, e, canon in match_aliases(toks, idx, ml):
-                        urls.append(url)
-                        sids.append(sid)
-                        starts.append(s)
-                        ends.append(e)
-                        texts.append(" ".join(toks[s:e]))
-                        ents.append(canon)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "start": pd.Series(starts, dtype="int32"),
-                    "end": pd.Series(ends, dtype="int32"),
-                    "text": pd.Series(texts, dtype="object"),
-                    "entity_id": pd.Series(ents, dtype="object"),
-                }
-            )
+            yield _emit_mentions(sentence_rows(pdf), idx, ml)
 
     return pages.select("url", "lang", "html").mapInPandas(scan, MENTIONS_SCHEMA)
 
-
-def mentions_by_join(
-    sentences: DataFrame, aliases: DataFrame, max_ngram: int | None = None
-) -> DataFrame:
-    """Join-based fallback (the literal J-3 shape): explode candidate n-grams,
-    equi-join on lowercase span text. Correct but shuffles O(n * max_ngram)
-    candidate rows — used when the alias table cannot broadcast.
-
-    max_ngram defaults to the LONGEST alias in the table (a fixed cap would
-    silently never match longer aliases); overlaps are resolved
-    longest-first-then-leftmost per sentence, matching the greedy scan on
-    non-pathological gazetteers.
-    """
-    if max_ngram is None:
-        row = aliases.agg(
-            F.max(F.size(F.split(F.col("alias_norm"), " "))).alias("m")
-        ).collect()[0]
-        max_ngram = int(row["m"] or 1)
-    toks = F.col("tokens")
-    # ONE scan of the sentences source: all n-gram lengths are enumerated
-    # inside a single nested higher-order expression (flatten of a transform
-    # over sequence(1, max_ngram)), instead of unioning one scan per length —
-    # with a long-tail alias table (max_ngram = longest alias) the union form
-    # was O(max_ngram) source scans.
-    cand_expr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(max_ngram)),
-            lambda ln: F.transform(
-                F.slice(toks, 1, F.greatest(F.size(toks) - ln + 1, F.lit(0))),
-                lambda _, i: F.struct(
-                    i.cast("int").alias("start"),
-                    (i + ln).cast("int").alias("end"),
-                    F.concat_ws(" ", F.slice(toks, i + 1, ln)).alias("text"),
-                ),
-            ),
-        )
-    )
-    cands = sentences.select(
-        "url", "sent_id", F.explode(cand_expr).alias("c")
-    ).select("url", "sent_id", "c.start", "c.end", "c.text")
-    # no broadcast hint: this path exists for alias tables too large to
-    # broadcast — let Catalyst pick broadcast vs shuffle-hash from stats
-    joined = cands.join(
-        aliases.select(F.col("alias_norm"), "canonical_id"),
-        F.lower(F.col("text")) == F.col("alias_norm"),
-    ).select("url", "sent_id", "start", "end", "text",
-             F.col("canonical_id").alias("entity_id"))
-    # greedy longest-first non-overlap per sentence: candidates collect to
-    # ONE array row per sentence and the pick runs as a batched scalar
-    # Arrow UDF (thousands of sentences per batch) — a grouped-map here
-    # paid a pandas DataFrame per tiny (url, sent_id) group, and the
-    # sort-inside-the-UDF also replaces the row_number window (one less
-    # shuffle+sort)
-    per_sent = joined.groupBy("url", "sent_id").agg(
-        F.collect_list(F.struct("start", "end", "text", "entity_id")).alias("cands")
-    )
-    picked = per_sent.select(
-        "url",
-        "sent_id",
-        F.explode(_pick_mentions_udf("cands")).alias("m"),
-    )
-    return picked.select(
-        F.col("url").cast("string").alias("url"),
-        F.col("sent_id").cast("int").alias("sent_id"),
-        F.col("m.start").cast("int").alias("start"),
-        F.col("m.end").cast("int").alias("end"),
-        F.col("m.text").cast("string").alias("text"),
-        F.col("m.entity_id").cast("string").alias("entity_id"),
-    )

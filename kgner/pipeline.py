@@ -42,11 +42,8 @@ class PipelineConfig:
     # domain's share of rows first (one url-column scan, map-side-combined
     # to #domains rows) and salts ONLY if it exceeds this share — a
     # balanced corpus skips the extra repartition shuffle entirely. None =
-    # salt_buckets alone decides (always-on when > 0). salt_probe_fraction
-    # bounds the probe's read at web scale (Bernoulli sample of the url
-    # column; shares are ratios, so sampling leaves them unbiased).
+    # salt_buckets alone decides (always-on when > 0).
     salt_threshold: float | None = None
-    salt_probe_fraction: float = 1.0
     max_text_chars: int | None = None  # giant-page cap (oracle-symmetric)
     resume: bool = True
     # retrieval knobs (both rounds):
@@ -199,21 +196,17 @@ class Pipeline:
         """Adaptive-salt probe: salt only when the hottest domain actually
         holds more than cfg.salt_threshold of the rows. The probe is one
         column-pruned pass over url (map-side combine collapses to
-        #domains rows before the tiny shuffle; salt_probe_fraction
-        Bernoulli-samples that pass at web scale — the SHARE is a ratio,
-        unbiased under sampling). salt_threshold=None preserves the
-        static always-salt behavior. The decision and the measured
-        hot-domain share are persisted in the extracted stage's lineage
-        record (extras.salt_engaged / extras.hot_domain_share); both stay
-        None when the stage is skipped on resume."""
+        #domains rows before the tiny shuffle). salt_threshold=None
+        preserves the static always-salt behavior. The decision and the
+        measured hot-domain share are persisted in the extracted stage's
+        lineage record (extras.salt_engaged / extras.hot_domain_share);
+        both stay None when the stage is skipped on resume."""
         if self.cfg.salt_threshold is None:
             self.salt_engaged = True
             return True
-        probe = pages.select(F.parse_url(F.col("url"), F.lit("HOST")).alias("d"))
-        if self.cfg.salt_probe_fraction < 1.0:
-            probe = probe.sample(fraction=self.cfg.salt_probe_fraction, seed=7)
         row = (
-            probe.groupBy("d")
+            pages.select(F.parse_url(F.col("url"), F.lit("HOST")).alias("d"))
+            .groupBy("d")
             .count()
             .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
             .first()

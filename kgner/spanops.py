@@ -150,15 +150,6 @@ def majority_vote(
 
 # --- Chunk F1 (conlleval semantics) -------------------------------------------
 
-def chunk_prf(
-    gold: list[Span], pred: list[Span]
-) -> tuple[int, int, int]:
-    """(tp, fp, fn) for exact span+label match (conlleval_perl.py:207-350)."""
-    gset, pset = set(gold), set(pred)
-    tp = len(gset & pset)
-    return tp, len(pset) - tp, len(gset) - tp
-
-
 def f1(tp: int, fp: int, fn: int) -> float:
     p = tp / (tp + fp) if tp + fp else 0.0
     r = tp / (tp + fn) if tp + fn else 0.0
@@ -298,11 +289,3 @@ def posterior_vote_decode(
         axis=0,
     )
     return [int(i) for i in np.argmax(post, axis=1)]
-
-
-def viterbi_decode_batch(
-    emissions_list: list[np.ndarray], transitions: np.ndarray
-) -> list[list[int]]:
-    """Decode a batch of variable-length sentences (loop of the vectorized
-    per-sentence DP; each step is numpy-vectorized over K^2)."""
-    return [viterbi_decode(e, transitions) for e in emissions_list]

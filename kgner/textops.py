@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-import unicodedata
 
 # --- HTML text extraction -------------------------------------------------
 # The reference consumes pre-extracted text (LMDB built by wikipedia2vec);
@@ -184,12 +183,6 @@ def strip_nonprintable(text: str) -> str:
     return "".join(c for c in text if c == "\n" or c.isprintable())
 
 
-def normalize_query(tokens: list[str]) -> str:
-    """Lowercased whitespace-joined sentence key (gen_sentence,
-    kb/context_process.py:188-211) — the retrieval-join key."""
-    return " ".join(tokens).lower()
-
-
 def split_keyword_cjk(text: str) -> list[str]:
     """CJK-vs-latin run segmentation (spliteKeyWord,
     kb/context_process.py:105-140): CJK runs become char-level units."""
@@ -249,11 +242,6 @@ def split_keyword_cjk_dict_max(text: str, lexicon) -> list[str]:
         else:
             out.append(run)
     return out
-
-
-def nfc(text: str) -> str:
-    """Pinned unicode normalization (NFC) applied exactly once at extraction."""
-    return unicodedata.normalize("NFC", text)
 
 
 # --- Anchor markup ----------------------------------------------------------

@@ -96,17 +96,6 @@ def test_pipeline_salted_same_output(spark, tmp_path):
     assert d.salt_engaged is False
 
 
-def test_adaptive_salt_probe_sampled(spark, tmp_path):
-    """The probe's Bernoulli sample leaves the share ratio unbiased — a
-    sampled probe reaches the same decision on the hot-domain fixture."""
-    p, _ = _mk(
-        spark, str(tmp_path / "s"), salt=8,
-        salt_threshold=0.05, salt_probe_fraction=0.5,
-    )
-    pages = p.inputs["pages"]
-    assert p._should_salt(pages) is True
-
-
 def test_pipeline_ensemble_strips_augmented_predictions(spark, tmp_path):
     """Predictions carrying an augmented token stream (sentence + <EOS> +
     retrieved context) are truncated at <EOS> before voting: spans the

@@ -61,10 +61,14 @@ def test_jvm_only_operators_have_no_python(spark):
 
 def test_mentions_stage_is_map_only(spark, tables):
     """detect_mentions must add no shuffle beyond its input."""
-    from kgner.functions.text import pages_to_sentences
+    from kgner.functions.text import extract_text_udf, with_sentences
     from kgner.operators.mentions import detect_mentions
 
-    sents = pages_to_sentences(tables["pages"].select("url", "lang", "html"))
+    sents = with_sentences(
+        tables["pages"].select(
+            "url", "lang", extract_text_udf("html").alias("text")
+        )
+    )
     aliases = spark.createDataFrame(
         [("zq", "ZQ")], "alias_norm string, canonical_id string"
     )
@@ -78,28 +82,6 @@ def test_ivf_probe_join_broadcasts(spark):
     plan = _plan(QUERIES["ivf_ann"](spark, SF))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_mentions_join_candidates_single_scan(spark):
-    """mentions_by_join enumerates ALL n-gram lengths inside one nested
-    higher-order expression — exactly ONE scan of the sentences source, not
-    a unionByName of one scan per length."""
-    from pyspark.sql import functions as F
-
-    from kgner.operators.mentions import mentions_by_join
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    sents = d.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(0).cast("int").alias("sent_id"),
-        F.split(F.lower("text"), " ").alias("tokens"),
-    )
-    aliases = spark.createDataFrame(
-        [("spark", "SPARK"), ("customer table", "CT")],
-        "alias_norm string, canonical_id string",
-    )
-    plan = _plan(mentions_by_join(sents, aliases, max_ngram=4))
-    assert plan.count("documents.parquet") == 1
 
 
 def test_strip_and_remove_x_are_jvm_only(spark):

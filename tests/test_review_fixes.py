@@ -98,22 +98,6 @@ def test_kb_sentences_dedup_keeps_min_pid(spark):
     assert got["other para here."] == 1
 
 
-def test_mentions_by_join_long_alias(spark):
-    from kgner.operators.mentions import mentions_by_join
-
-    sents = spark.createDataFrame(
-        [("u", 0, ["university", "of", "california", "los", "angeles", "wins"])],
-        "url string, sent_id int, tokens array<string>",
-    )
-    aliases = spark.createDataFrame(
-        [("university of california los angeles", "UCLA")],
-        "alias_norm string, canonical_id string",
-    )
-    got = mentions_by_join(sents, aliases).collect()  # max_ngram auto-derived
-    assert len(got) == 1 and got[0]["entity_id"] == "UCLA"
-    assert got[0]["start"] == 0 and got[0]["end"] == 5
-
-
 def test_cosine_near_dup_multiband_recall(spark):
     import numpy as np
 

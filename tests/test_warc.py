@@ -43,14 +43,16 @@ def test_warc_spark_reader_feeds_pipeline(spark, tmp_path, fx):
     # WARC -> extract -> sentences -> mentions works end to end
     from pyspark.sql import functions as F
 
-    from kgner.functions.text import pages_to_sentences
+    from kgner.functions.text import extract_text_udf, with_sentences
     from kgner.operators.mentions import detect_mentions
 
     aliases = spark.createDataFrame(
         list(fx.alias_map.items()), "alias_norm string, canonical_id string"
     )
-    pages_df = df.withColumn("lang", F.lit("en"))
-    mentions = detect_mentions(spark, pages_to_sentences(pages_df), aliases)
+    pages_df = df.select(
+        "url", F.lit("en").alias("lang"), extract_text_udf("html").alias("text")
+    )
+    mentions = detect_mentions(spark, with_sentences(pages_df), aliases)
     assert mentions.count() > 0
 
 def test_warc_fractional_date_and_missing_length():
