@@ -78,3 +78,30 @@ def connected_components(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: find(n) for n in parent} | {
         n: find(n) for e in edges for n in e
     }
+
+
+def canonical_aliases(
+    comp: dict[str, str], titles: set[str]
+) -> dict[str, str]:
+    """{node: component} + KB titles -> {alias_norm: canonical_id}.
+
+    A component's representative is its smallest KB title, else its smallest
+    node. Every node maps, lower-cased, to its component's representative;
+    nodes of different components whose lower-case forms collide take the
+    smallest representative. Shared by the oracle and the driver-side branch
+    of kgner.operators.canonicalize.canonical_map.
+    """
+    title_rep: dict[str, str] = {}
+    node_rep: dict[str, str] = {}
+    for node, c in comp.items():
+        if node in titles and (c not in title_rep or node < title_rep[c]):
+            title_rep[c] = node
+        if c not in node_rep or node < node_rep[c]:
+            node_rep[c] = node
+    out: dict[str, str] = {}
+    for node, c in comp.items():
+        canon = title_rep.get(c, node_rep[c])
+        key = node.lower()
+        if key not in out or canon < out[key]:
+            out[key] = canon
+    return out

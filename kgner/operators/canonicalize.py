@@ -1,16 +1,24 @@
-"""Distributed connected components for alias/redirect canonicalization.
+"""Connected components for alias/redirect canonicalization.
 
 The reference resolves one redirect hop (db.resolve_redirect,
 /root/reference/kb/parse_text.py:59-63); real web KBs have chains and cycles,
-so we canonicalize via connected components: iterative min-label propagation
-expressed as DataFrame self-joins (no GraphFrames dependency).
+so we canonicalize via connected components.
 
-Scale notes:
+Two branches, chosen by connected_components' row and byte caps:
+- local (the edge list fits the driver): union-find over the collected
+  edges; canonical_map then builds the whole alias map on the driver with
+  linkops.canonical_aliases, the function the oracle uses, and hands it to
+  Spark as one Arrow-backed DataFrame — no Spark job beyond the collects.
+- distributed: iterative min-label propagation expressed as DataFrame
+  self-joins (no GraphFrames dependency), followed by the representative
+  joins in Spark.
+
+Scale notes (distributed branch):
 - each iteration is one shuffle on `node` (groupBy min) + one join;
   iterations = O(graph diameter); redirect graphs have tiny diameter (<10).
 - `max_iters` caps pathological chains; `localCheckpoint()` every iteration
   cuts the lineage so the plan doesn't grow exponentially (classic iterative-
-  DataFrame pitfall).
+  DataFrame pitfall), and canonical_map checkpoints its result.
 - convergence check is a cheap aggregate (sum of label changes).
 """
 
@@ -19,12 +27,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgner import linkops
+
+# connected_components' driver-side caps: edge rows, and estimated bytes
+LOCAL_MAX_EDGES = 2_000_000
+LOCAL_MAX_BYTES = 256 * 1024 * 1024
+
 
 def connected_components(
     edges: DataFrame,
     max_iters: int = 20,
-    local_threshold: int = 2_000_000,
-    local_threshold_bytes: int = 256 * 1024 * 1024,
+    local_threshold: int = LOCAL_MAX_EDGES,
+    local_threshold_bytes: int = LOCAL_MAX_BYTES,
 ) -> DataFrame:
     """edges(src, dst) undirected -> (node, component) with component = the
     lexicographically smallest node in the component (matches the oracle
@@ -56,35 +70,50 @@ def connected_components(
     instead of starting Python workers as a list-built DataFrame would.
     """
     edges = _non_null(edges)
+    rows = _local_edges(edges, local_threshold, local_threshold_bytes)
+    if rows is None:
+        return _cc_distributed(edges, max_iters)
+    comp = linkops.connected_components(rows)
+    return _arrow_frame(edges.sparkSession, ("node", "component"), sorted(comp.items()))
+
+
+def _local_edges(
+    edges: DataFrame,
+    local_threshold: int = LOCAL_MAX_EDGES,
+    local_threshold_bytes: int = LOCAL_MAX_BYTES,
+) -> list[tuple[str, str]] | None:
+    """The (src, dst) edge list collected to the driver, or None when it
+    exceeds the row or byte cap (see connected_components)."""
     PROBE = 1024
     probe = [
         (r[0], r[1]) for r in edges.select("src", "dst").limit(PROBE).collect()
     ]
     if len(probe) < PROBE:
-        rows = probe  # the probe WAS the whole graph
-    else:
-        # ~98 bytes of PyObject/tuple overhead per edge beyond the characters;
-        # 1.25x pads the single-partition probe against cross-partition skew
-        avg_bytes = 1.25 * (
-            sum(len(s or "") + len(d or "") for s, d in probe) / len(probe) + 98
-        )
-        row_cap = min(local_threshold, int(local_threshold_bytes / avg_bytes))
-        rows = [
-            (r[0], r[1])
-            for r in edges.select("src", "dst").limit(row_cap + 1).collect()
-        ]
-        if len(rows) > row_cap:
-            return _cc_distributed(edges, max_iters)
-    from kgner.linkops import connected_components as uf
+        return probe  # the probe WAS the whole graph
+    # ~98 bytes of PyObject/tuple overhead per edge beyond the characters;
+    # 1.25x pads the single-partition probe against cross-partition skew
+    avg_bytes = 1.25 * (
+        sum(len(s or "") + len(d or "") for s, d in probe) / len(probe) + 98
+    )
+    row_cap = min(local_threshold, int(local_threshold_bytes / avg_bytes))
+    rows = [
+        (r[0], r[1])
+        for r in edges.select("src", "dst").limit(row_cap + 1).collect()
+    ]
+    return None if len(rows) > row_cap else rows
 
+
+def _arrow_frame(spark, names: tuple[str, str], rows: list[tuple[str, str]]):
+    """A two-string-column DataFrame built from a pyarrow.Table: its scans
+    stay in the JVM instead of starting Python workers as a list-built
+    DataFrame would."""
     import pyarrow as pa
 
-    nodes = sorted(uf(rows).items())
     table = pa.table(
-        [[n for n, _ in nodes], [c for _, c in nodes]],
-        schema=pa.schema([("node", pa.string()), ("component", pa.string())]),
+        [[r[0] for r in rows], [r[1] for r in rows]],
+        schema=pa.schema([(n, pa.string()) for n in names]),
     )
-    return edges.sparkSession.createDataFrame(table)
+    return spark.createDataFrame(table)
 
 
 def _non_null(edges: DataFrame) -> DataFrame:
@@ -148,8 +177,24 @@ def canonical_map(
     Representative = the KB title in the component when one exists (smallest
     title if several), else the smallest node — same rule as the oracle.
     `titles` must have a `title` column. Output alias_norm is lowercased.
+
+    When the edge list fits the driver (connected_components' local caps),
+    the whole map is built there, where the edges already are: union-find,
+    the titles collected once, and linkops.canonical_aliases, the function
+    the oracle's build_canonical_map calls. The result is one Arrow-backed
+    DataFrame with nothing upstream to recompute. Above the caps, the
+    distributed CC and the representative joins below run in Spark.
     """
-    comp = connected_components(edges, max_iters=max_iters)
+    edges = _non_null(edges)
+    rows = _local_edges(edges)
+    if rows is not None:
+        title_set = {r[0] for r in titles.select("title").collect()}
+        comp = linkops.connected_components(rows)
+        canon = linkops.canonical_aliases(comp, title_set)
+        return _arrow_frame(
+            edges.sparkSession, ("alias_norm", "canonical_id"), sorted(canon.items())
+        )
+    comp = _cc_distributed(edges, max_iters)
     t = titles.select(F.col("title")).distinct()
     rep = (
         comp.join(t, comp.node == t.title, "left")
@@ -173,6 +218,7 @@ def canonical_map(
     )
     # The map is dimension-sized and typically consumed twice per pipeline
     # (broadcast-index build AND the triple join) — checkpoint so the edge
-    # build + CC + representative joins run once per job instead of once
-    # per consumer (~40% of the bench KG pipeline before this).
+    # build + distributed CC + representative joins run once per job instead
+    # of once per consumer (~40% of the bench KG pipeline before this, when
+    # every graph took this Spark path).
     return out.localCheckpoint(eager=False)

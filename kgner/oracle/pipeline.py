@@ -9,40 +9,25 @@ distribution bug, not a semantics bug.
 from __future__ import annotations
 
 from kgner.fixtures import Fixtures
-from kgner.linkops import build_alias_index, connected_components, match_aliases
+from kgner.linkops import (
+    build_alias_index,
+    canonical_aliases,
+    connected_components,
+    match_aliases,
+)
 from kgner.spanops import decode_spans, majority_vote
 from kgner.textops import extract_text, split_sentences, tokenize
 
 
 def build_canonical_map(fx_kb_pages: list[dict], redirects: list[dict]) -> dict[str, str]:
-    """alias/title (lower) -> canonical entity id via CC over redirect edges.
-
-    Component representative: the KB title if the component contains exactly
-    one, else the lexicographically smallest member (deterministic).
-    """
+    """alias/title (lower) -> canonical entity id via CC over redirect edges
+    plus title self-loops; representatives by linkops.canonical_aliases (the
+    component's smallest KB title, else its smallest member; lower-case
+    collisions take the smallest canonical id)."""
     titles = {p["title"] for p in fx_kb_pages}
     edges = [(r["alias_title"], r["canonical_title"]) for r in redirects]
     edges += [(t, t) for t in titles]
-    comp = connected_components(edges)
-    by_comp: dict[str, list[str]] = {}
-    for node, rep in comp.items():
-        by_comp.setdefault(rep, []).append(node)
-    out: dict[str, str] = {}
-
-    def put(key: str, canon: str) -> None:
-        # case-collisions across components resolve to min(canonical_id),
-        # matching kgner.operators.canonicalize.canonical_map
-        if key not in out or canon < out[key]:
-            out[key] = canon
-
-    for rep, members in by_comp.items():
-        in_titles = sorted(m for m in members if m in titles)
-        canon = in_titles[0] if in_titles else min(members)
-        for m in members:
-            put(m.lower(), canon)
-    for t in titles:
-        put(t.lower(), out.get(t.lower(), t))
-    return out
+    return canonical_aliases(connected_components(edges), titles)
 
 
 def oracle_triples(fx: Fixtures) -> set[tuple[str, str, str]]:

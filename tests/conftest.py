@@ -1,3 +1,6 @@
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
 from kgner.session import get_spark
@@ -21,3 +24,28 @@ def tables(spark, fx):
     from kgner.fixtures import to_spark
 
     return to_spark(spark, fx)
+
+
+@pytest.fixture(scope="session")
+def job_group(spark):
+    """`with job_group() as jobs:` -> `jobs` lists the ids of the Spark jobs
+    submitted by this thread inside the block (a job group the test sets;
+    kgner sets none). Blocks nest: the enclosing group is restored on exit,
+    and a job counts only in the innermost block. The listener bus is
+    drained before the ids are read, so a job that ran is never missed."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def group():
+        gid = f"test-{uuid.uuid4().hex[:12]}"
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(gid, gid)
+        jobs: list[int] = []
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(gid)))
+
+    return group

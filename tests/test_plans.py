@@ -76,6 +76,32 @@ def test_mentions_stage_is_map_only(spark, tables):
     assert "Exchange" not in plan  # map-only: scan -> UDFs -> scan-out
 
 
+def test_all_triples_single_dedup_over_union(spark, tables):
+    """all_triples deduplicates once, over the union of its three parts: the
+    optimized plan has one Aggregate above the Union and, below it, only the
+    per-sentence collect_set of the co-occurrence part."""
+    from kgner.operators.kbbuild import kb_sentences
+    from kgner.operators.triples import all_triples
+
+    mentions = spark.createDataFrame(
+        [("u", 0, 0, 1, "A"), ("u", 0, 2, 3, "B")],
+        "url string, sent_id int, start int, end int, entity_id string",
+    )
+    canon = spark.createDataFrame(
+        [("a", "A"), ("b", "B")], "alias_norm string, canonical_id string"
+    )
+    df = all_triples(mentions, kb_sentences(tables["kb_pages"]), canon)
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    nodes = [re.sub(r"^[\s:+\-]*", "", ln) for ln in lines]
+    unions = [i for i, n in enumerate(nodes) if n.startswith("Union")]
+    assert len(unions) == 1, nodes
+    aggs = [i for i, n in enumerate(nodes) if n.startswith("Aggregate")]
+    above = [i for i in aggs if i < unions[0]]
+    below = [nodes[i] for i in aggs if i > unions[0]]
+    assert len(above) == 1, nodes
+    assert len(below) == 1 and "collect_set" in below[0], below
+
+
 def test_ivf_probe_join_broadcasts(spark):
     from kgner.queries import QUERIES
 

@@ -312,6 +312,58 @@ def test_cc_null_endpoints_dropped_on_both_paths(spark):
     dist = sorted(map(tuple, canon._cc_distributed(edges).collect()))
     assert local == dist == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")]
 
+def test_canonical_map_local_and_distributed_branches_agree(spark, monkeypatch):
+    """canonical_map's driver-side branch and its Spark branch (forced by
+    reporting the edge list as too large for the driver) give the same map,
+    and both equal the oracle's build_canonical_map: a redirect chain, a
+    cycle without and with a KB title, lower-case collisions across
+    components (min canonical_id wins), non-ASCII lower-casing, and a
+    redirect with a null target."""
+    import kgner.operators.canonicalize as canon
+    from kgner.operators.kbbuild import alias_edges
+    from kgner.oracle.pipeline import build_canonical_map
+
+    titles = ["Paris", "Rome", "Apple", "APPLE", "İstanbul", "Οδυσσέας"]
+    redirects = [
+        ("P1", "P2"), ("P2", "Paris"),  # chain to a title
+        ("Xb", "Xa"), ("Xa", "Xb"),  # cycle, no title: smallest node
+        ("Roma", "Rome"), ("Rome", "Roma"),  # cycle through a title
+        ("apple inc", "Apple"), ("Apple Records", "APPLE"),  # lower collision
+        ("ISTANBUL", "İstanbul"), ("ΟΔΥΣΣΈΑΣ", "Οδυσσέας"),
+        ("Ghost", None),  # redirect with no target
+    ]
+    kb = spark.createDataFrame([(t,) for t in titles], "title string")
+    red = spark.createDataFrame(redirects, "alias_title string, canonical_title string")
+    edges = alias_edges(kb, red)
+
+    calls = {"distributed": 0}
+    orig = canon._cc_distributed
+
+    def spy(edges, max_iters=20):
+        calls["distributed"] += 1
+        return orig(edges, max_iters)
+
+    monkeypatch.setattr(canon, "_cc_distributed", spy)
+    local = sorted(map(tuple, canon.canonical_map(edges, kb).collect()))
+    assert calls["distributed"] == 0
+    monkeypatch.setattr(canon, "_local_edges", lambda *a, **k: None)
+    dist = sorted(map(tuple, canon.canonical_map(edges, kb).collect()))
+    assert calls["distributed"] == 1
+
+    oracle = build_canonical_map(
+        [{"title": t} for t in titles],
+        [{"alias_title": a, "canonical_title": c} for a, c in redirects],
+    )
+    assert local == dist == sorted(oracle.items())
+    got = dict(local)
+    assert got["p1"] == got["p2"] == "Paris"
+    assert got["xa"] == got["xb"] == "Xa"
+    assert got["roma"] == "Rome"
+    assert got["apple"] == "APPLE" and got["apple inc"] == "Apple"
+    assert got["istanbul"] == got["i\u0307stanbul"] == "İstanbul"
+    assert "ghost" not in got
+
+
 # --- IVF ANN --------------------------------------------------------------------
 
 def test_ivf_topk_duplicate_probe_recall(spark):
