@@ -6,9 +6,10 @@ so we canonicalize via connected components.
 
 Two branches, chosen by connected_components' row and byte caps:
 - local (the edge list fits the driver): union-find over the collected
-  edges; canonical_map then builds the whole alias map on the driver with
-  linkops.canonical_aliases, the function the oracle uses, and hands it to
-  Spark as one Arrow-backed DataFrame — no Spark job beyond the collects.
+  edges; canonical_map collects the KB titles in the same collect, builds
+  the whole alias map on the driver with linkops.canonical_aliases, the
+  function the oracle uses, and hands it to Spark as one Arrow-backed
+  DataFrame — no Spark job beyond that collect.
 - distributed: iterative min-label propagation expressed as DataFrame
   self-joins (no GraphFrames dependency), followed by the representative
   joins in Spark.
@@ -54,9 +55,10 @@ def connected_components(
     The local bound is BYTE-aware, not just row-count: a tiny probe ESTIMATES
     average edge width, and the row cap shrinks so the bounded collect stays
     under `local_threshold_bytes` — 2M edges of wide node strings would
-    otherwise land several hundred MB on the driver. The probe is an
-    unordered limit(), which typically reads one partition; if edge widths
-    are skewed across partitions the estimate can undercount, so the
+    otherwise land several hundred MB on the driver. The probe is the first
+    1024 rows in partition order, read by one task (so one Spark job, and
+    the whole graph when it is smaller); if edge widths are skewed across
+    partitions the estimate can undercount, so the
     per-edge estimate is padded by a 1.25x safety factor (and the collect
     stays hard-bounded by the `local_threshold` row cap regardless). With
     the defaults the byte cap starts undercutting the 2M row cap at ~5 chars
@@ -70,7 +72,9 @@ def connected_components(
     instead of starting Python workers as a list-built DataFrame would.
     """
     edges = _non_null(edges)
-    rows = _local_edges(edges, local_threshold, local_threshold_bytes)
+    rows = _local_edges(
+        edges.select("src", "dst"), local_threshold, local_threshold_bytes
+    )
     if rows is None:
         return _cc_distributed(edges, max_iters)
     comp = linkops.connected_components(rows)
@@ -81,25 +85,24 @@ def _local_edges(
     edges: DataFrame,
     local_threshold: int = LOCAL_MAX_EDGES,
     local_threshold_bytes: int = LOCAL_MAX_BYTES,
-) -> list[tuple[str, str]] | None:
-    """The (src, dst) edge list collected to the driver, or None when it
-    exceeds the row or byte cap (see connected_components)."""
+) -> list[tuple] | None:
+    """The rows of `edges` (src, dst and any further columns) collected to
+    the driver as tuples, or None when they exceed the row or byte cap (see
+    connected_components)."""
     PROBE = 1024
-    probe = [
-        (r[0], r[1]) for r in edges.select("src", "dst").limit(PROBE).collect()
-    ]
+    # one partition: the probe is one Spark job that reads the inputs in
+    # turn until it has PROBE rows, where a plain limit() submits a job per
+    # round of partitions it scans
+    probe = [tuple(r) for r in edges.coalesce(1).limit(PROBE).collect()]
     if len(probe) < PROBE:
         return probe  # the probe WAS the whole graph
     # ~98 bytes of PyObject/tuple overhead per edge beyond the characters;
     # 1.25x pads the single-partition probe against cross-partition skew
     avg_bytes = 1.25 * (
-        sum(len(s or "") + len(d or "") for s, d in probe) / len(probe) + 98
+        sum(len(r[0] or "") + len(r[1] or "") for r in probe) / len(probe) + 98
     )
     row_cap = min(local_threshold, int(local_threshold_bytes / avg_bytes))
-    rows = [
-        (r[0], r[1])
-        for r in edges.select("src", "dst").limit(row_cap + 1).collect()
-    ]
+    rows = [tuple(r) for r in edges.limit(row_cap + 1).collect()]
     return None if len(rows) > row_cap else rows
 
 
@@ -178,18 +181,29 @@ def canonical_map(
     title if several), else the smallest node — same rule as the oracle.
     `titles` must have a `title` column. Output alias_norm is lowercased.
 
-    When the edge list fits the driver (connected_components' local caps),
-    the whole map is built there, where the edges already are: union-find,
-    the titles collected once, and linkops.canonical_aliases, the function
-    the oracle's build_canonical_map calls. The result is one Arrow-backed
-    DataFrame with nothing upstream to recompute. Above the caps, the
-    distributed CC and the representative joins below run in Spark.
+    When the edges and titles fit the driver (connected_components' local
+    caps), the whole map is built there: one collect of the edges and the
+    titles together (title rows flagged, never inferred from self-loops — a
+    redirect can be (x, x)), union-find, and linkops.canonical_aliases, the
+    function the oracle's build_canonical_map calls. The result is one
+    Arrow-backed DataFrame with nothing upstream to recompute. Above the
+    caps, the distributed CC and the representative joins below run in
+    Spark.
     """
     edges = _non_null(edges)
-    rows = _local_edges(edges)
+    flagged = edges.select("src", "dst", F.lit(False).alias("is_title")).union(
+        titles.select(
+            F.col("title").alias("src"),
+            F.lit(None).cast("string").alias("dst"),
+            F.lit(True).alias("is_title"),
+        )
+    )
+    rows = _local_edges(flagged)
     if rows is not None:
-        title_set = {r[0] for r in titles.select("title").collect()}
-        comp = linkops.connected_components(rows)
+        title_set = {src for src, _, is_title in rows if is_title}
+        comp = linkops.connected_components(
+            [(src, dst) for src, dst, is_title in rows if not is_title]
+        )
         canon = linkops.canonical_aliases(comp, title_set)
         return _arrow_frame(
             edges.sparkSession, ("alias_norm", "canonical_id"), sorted(canon.items())

@@ -8,19 +8,78 @@ Reference analogue (/root/reference):
   order-preserving, shuffle-free — deterministic W-4 without a window)
 - ES index build             kb/build_kb.py:17-86    -> postings/docs tables
 
-Scale notes: postings are built by explode+groupBy on (term, doc_id) — one
-shuffle keyed by high-cardinality (term, doc_id), no skew hot-spot beyond
-stopword terms, which BM25 idf renders harmless and AQE skew-split handles.
-At 100 TB the postings table would be written bucketed by `term` so the
-retrieval join (J-1) is shuffle-free on the KB side.
+Scale notes: postings are map-only. Each kb_sentences row is exactly one
+doc_id, so term_frequencies counts every term inside its row (sort the
+token array, measure its runs of equal tokens) — the count ES makes inside
+the document it indexes — and the index stage writes no shuffle at any KB
+size. At 100 TB the postings table would be written bucketed by `term` so
+the retrieval join (J-1) is shuffle-free on the KB side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgner.functions.text import split_sentences_udf, tokens_col
+
+
+def term_frequencies(
+    df: DataFrame,
+    tokens: Column,
+    keys: list[str],
+    tf: str = "tf",
+) -> DataFrame:
+    """-> (*keys, term, tf int): one row per distinct token of each row's
+    `tokens` array, with its count in that array. Map-only and JVM-only.
+
+    The count is per ROW, not per key: a key whose tokens are spread over
+    several rows gets one output row per input row and token. Callers pass
+    rows that are one document each (the row key is the document id), which
+    is what makes this the document's term frequency.
+
+    The array is sorted once, as a projected column; the 1-based starts of
+    its runs of equal tokens (null-safe compare, so null tokens count as one
+    term like any other) are projected next; each start zipped with the next
+    start (or size + 1) gives a run's token and length, and `inline` turns
+    the runs into rows. An empty or null array gives no rows. Higher-order
+    function lambdas run interpreted, so they read only the projected
+    columns: a lambda that captured the sort would re-sort the array once
+    per element.
+    """
+    srt, starts = "__tf_sorted", "__tf_starts"
+    n = F.size(srt)
+    # sort_array orders natively; array_sort would run its comparator
+    # lambda interpreted for every comparison
+    sorted_ = df.select(*keys, F.sort_array(tokens).alias(srt))
+    runs = sorted_.select(
+        *keys,
+        srt,
+        F.when(
+            n > 0,
+            F.filter(
+                F.sequence(F.lit(1), n),
+                # greatest(): element_at(_, 0) raises even where i = 1 wins
+                lambda i: (i == 1)
+                | ~F.element_at(srt, i).eqNullSafe(
+                    F.element_at(srt, F.greatest(i - 1, F.lit(1)))
+                ),
+            ),
+        ).alias(starts),
+    )
+    ends = F.concat(F.slice(starts, 2, F.size(starts)), F.array(n + 1))
+    return runs.select(
+        *keys,
+        F.inline(
+            F.zip_with(
+                starts,
+                ends,
+                lambda a, b: F.struct(
+                    F.element_at(srt, a).alias("term"), (b - a).alias(tf)
+                ),
+            )
+        ),
+    )
 
 
 def kb_sentences(kb_pages: DataFrame) -> DataFrame:
@@ -86,14 +145,20 @@ def kb_index(
     zh_lexicon=None,
     zh_dict_mode: str = "smart",
 ) -> tuple[DataFrame, DataFrame]:
-    """kb_sentences -> (postings(term, doc_id, tf), docs(doc_id, len, title,
-    url, sentence, paragraph)).
+    """kb_sentences -> (postings(term, doc_id, lang, tf), docs(doc_id,
+    title, url, sentence, paragraph, lang, len)).
 
     doc_id = dense per-sentence id derived from xxhash64(title,p_id,s_id) —
     deterministic, no global ordering pass (at 10^12 docs a row_number over
     everything is a non-starter). `paragraph` rides along so retrieval rows
     can carry the reference's paragraph field
     (kb/generate_data.py:65: hit tuple includes _source.paragraph).
+
+    Postings are map-only: (title, p_id, s_id) is the row key of
+    kb_sentences, so each row is exactly one doc_id and term_frequencies
+    counts each term inside its own row — no (term, doc_id) groupBy, no
+    shuffle. A kb_sentences input with two rows of one (title, p_id, s_id)
+    would give that doc_id two postings rows per shared term.
 
     per_lang_analyzer=True mirrors the reference's per-language index
     ANALYZERS, not just its per-language routing: zh/ja/ko docs are
@@ -173,17 +238,16 @@ def kb_index(
     # `lang` rides on BOTH tables so bm25_topk(lang_col="lang") can scope the
     # retrieval to the query's language — the DataFrame analogue of the
     # reference's one-ES-index-per-language layout ({lang}wiki_v1,
-    # kb/build_kb.py:17-22). doc_id determines lang, so carrying it through
-    # the (term, doc_id) groupBy costs nothing.
-    postings = (
+    # kb/build_kb.py:17-22).
+    postings = term_frequencies(
         kb_sents.select(
             F.xxhash64("title", "p_id", "s_id").alias("doc_id"),
             lang,
-            F.explode(tok(F.lower(F.col("sentence")))).alias("term"),
-        )
-        .groupBy("term", "doc_id", "lang")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-    )
+            tok(F.lower(F.col("sentence"))).alias("toks"),
+        ),
+        F.col("toks"),
+        ["doc_id", "lang"],
+    ).select("term", "doc_id", "lang", "tf")
     return postings, docs
 
 
@@ -191,7 +255,10 @@ def alias_edges(kb_pages: DataFrame, redirects: DataFrame) -> DataFrame:
     """Edge list (src, dst) of the alias graph: redirects + title self-loops.
 
     Input to canonicalize.connected_components; anchor mentions are linked at
-    match time (they resolve through this same canonical map).
+    match time (they resolve through this same canonical map). Duplicate
+    edges are kept: union-find and the distributed CC both tolerate them,
+    and a dedup here would be a shuffle job of its own before the driver
+    collects the edge list.
     """
     title_loops = kb_pages.select(
         F.col("title").alias("src"), F.col("title").alias("dst")
@@ -199,4 +266,4 @@ def alias_edges(kb_pages: DataFrame, redirects: DataFrame) -> DataFrame:
     redir = redirects.select(
         F.col("alias_title").alias("src"), F.col("canonical_title").alias("dst")
     )
-    return redir.unionByName(title_loops).distinct()
+    return redir.unionByName(title_loops)

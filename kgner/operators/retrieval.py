@@ -22,6 +22,10 @@ Scale notes:
   broadcast into the join (no driver collect of data-sized state).
 - the final top-k is a window over query_id — the natural partitioning; with
   AQE the post-aggregation partition count adapts to the query count.
+- the entity boost's title postings are map-only: each docs row is one
+  doc_id, so title tf is counted inside the row (kbbuild.term_frequencies),
+  as kb_index counts the text postings. The title df and stats are still
+  derived from docs on every call.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kgner.bm25 import B, K1
+from kgner.operators.kbbuild import term_frequencies
 
 
 def bm25_topk(
@@ -180,20 +185,21 @@ def bm25_topk(
         # ES computes per-field stats over docs WHERE THE FIELD EXISTS
         # (Lucene docCount / sumTotalTermFreq are field-local), so docs with
         # a null/empty title are excluded from n_tdocs, avg_tlen, and tdf.
-        # Titles are dimension-sized relative to the corpus text, so all
-        # three title aggregates broadcast.
+        # The title postings are map-only: each docs row is one doc_id
+        # (docs comes from kb_index, keyed on it), so a term's tf is counted
+        # inside the row by kbbuild.term_frequencies, with no groupBy and no
+        # shuffle. Titles are dimension-sized relative to the corpus text,
+        # so the two title aggregates (tstats, tdf) broadcast.
         ttoks = docs.select(
             "doc_id",
             *langk,
             F.split(F.trim(F.lower("title")), r"\s+").alias("ttoks"),
         ).filter(F.col("ttoks").isNotNull() & (F.col("ttoks") != F.array(F.lit(""))))
-        tpostings = ttoks.select(
-            "doc_id",
-            *langk,
-            F.size("ttoks").alias("tlen"),
-            F.explode("ttoks").alias("term"),
-        ).groupBy("doc_id", *langk, "tlen", "term").agg(
-            F.count(F.lit(1)).alias("ttf")
+        tpostings = term_frequencies(
+            ttoks.select("doc_id", *langk, F.size("ttoks").alias("tlen"), "ttoks"),
+            F.col("ttoks"),
+            ["doc_id", *langk, "tlen"],
+            tf="ttf",
         )
         tstats = ttoks.groupBy(*langk).agg(
             F.avg(F.size("ttoks")).alias("avg_tlen"),

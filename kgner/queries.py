@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kgner.functions.text import BPE_ISH_PATTERN
+from kgner.operators.kbbuild import term_frequencies
 from kgner.operators.partitioning import spread_scan
 
 # gazetteer over the synthetic `documents` vocabulary (entity stand-ins)
@@ -977,14 +978,13 @@ def bm25_contract_inputs(spark, sf_dir):
     # guard passes and the spread keeps its measured win).
     from kgner.operators.partitioning import SPREAD_MIN_BYTES_PER_CORE
 
-    postings = (
-        spread_scan(
-            d, "doc_id", min_bytes_per_core=SPREAD_MIN_BYTES_PER_CORE
-        ).select(F.col("doc_id"), F.explode(toks).alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    # doc_id is the documents key: term_frequencies counts each term inside
+    # its document's row, no (term, doc_id) groupBy
+    postings = term_frequencies(
+        spread_scan(d, "doc_id", min_bytes_per_core=SPREAD_MIN_BYTES_PER_CORE),
+        toks,
+        ["doc_id"],
+    ).localCheckpoint(eager=False)
     queries = d.filter(F.col("doc_id") < 5).select(
         F.col("doc_id").alias("query_id"),
         F.array_distinct(F.slice(toks, 1, 6)).alias("qterms"),
@@ -1110,12 +1110,9 @@ def q_bm25_retrieval_lang(spark, sf_dir):
     (the "mix" mode) changes every score and hash-mismatches."""
     d = _t(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
-    postings = (
-        d.select("doc_id", "lang", F.explode(toks).alias("term"))
-        .groupBy("term", "doc_id", "lang")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)  # one tokenize for lens/stats/df/join
-    )
+    postings = term_frequencies(d, toks, ["doc_id", "lang"]).localCheckpoint(
+        eager=False
+    )  # one tokenize for lens/stats/df/join
     lens = postings.groupBy("doc_id", "lang").agg(F.sum("tf").alias("len"))
     stats = lens.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
@@ -1261,12 +1258,9 @@ def q_bm25_entity_boost(spark, sf_dir):
     query. (Upgraded r3 from a flat-additive simplification.)"""
     d = _t(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
-    doc_toks = d.select(F.col("doc_id"), F.explode(toks).alias("term"))
-    postings = (
-        doc_toks.groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)  # one tokenize+explode for all consumers
-    )
+    postings = term_frequencies(d, toks, ["doc_id"]).localCheckpoint(
+        eager=False
+    )  # one tokenize for all consumers
     lens = postings.groupBy("doc_id").agg(F.sum("tf").alias("len"))
     stats = lens.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len"))
     dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1296,12 +1290,11 @@ def q_bm25_entity_boost(spark, sf_dir):
     # title-field statistics: tf within the 2-token title, field length,
     # per-term title df, corpus avg title length
     ttoks = d.select("doc_id", F.slice(toks, 1, 2).alias("ttoks"))
-    tpostings = (
-        ttoks.select(
-            "doc_id", F.size("ttoks").alias("tlen"), F.explode("ttoks").alias("term")
-        )
-        .groupBy("doc_id", "tlen", "term")
-        .agg(F.count(F.lit(1)).alias("ttf"))
+    tpostings = term_frequencies(
+        ttoks.select("doc_id", F.size("ttoks").alias("tlen"), "ttoks"),
+        F.col("ttoks"),
+        ["doc_id", "tlen"],
+        tf="ttf",
     )
     tstats = ttoks.agg(F.avg(F.size("ttoks")).alias("avg_tlen"))
     tdf = tpostings.groupBy("term").agg(F.count(F.lit(1)).alias("tdf"))

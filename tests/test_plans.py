@@ -242,3 +242,68 @@ def test_shingle_df_long_document(spark):
     got = [r["shingle"] for r in shingle_df(docs, n=3).collect()]
     assert len(got) == len(set(got))
     assert sorted(got) == shingles(toks, 3)
+
+
+def _kb_sents(spark):
+    return spark.createDataFrame(
+        [
+            ("Paris", 0, 0, "Paris is the capital of France", "p", "u1", "en"),
+            ("Paris Hilton", 0, 0, "the Paris the", "p", "u2", None),
+        ],
+        "title string, p_id int, s_id int, sentence string, paragraph string,"
+        " url string, lang string",
+    )
+
+
+def _boosted_topk(spark):
+    from kgner.operators.kbbuild import kb_index
+    from kgner.operators.retrieval import bm25_topk
+
+    postings, docs = kb_index(_kb_sents(spark))
+    queries = spark.createDataFrame(
+        [(1, ["paris", "capital"], "en")],
+        "query_id long, tokens array<string>, lang string",
+    )
+    boosts = spark.createDataFrame([(1, "Paris")], "query_id long, entity string")
+    return bm25_topk(queries, postings, docs, k=3, boost_entities=boosts, lang_col="lang")
+
+
+def test_kb_index_postings_map_only(spark):
+    """Each kb_sentences row is one doc_id, so the postings are counted
+    inside the row: no shuffle and no aggregate in the executed plan."""
+    from kgner.operators.kbbuild import kb_index
+
+    postings, _ = kb_index(_kb_sents(spark))
+    plan = _plan(postings)
+    assert "Exchange" not in plan, plan
+    assert "Aggregate" not in plan, plan
+
+
+def test_bm25_title_postings_not_aggregated(spark):
+    """The entity boost's title postings come from term_frequencies, not an
+    aggregate keyed on (doc_id, [lang,] tlen, term)."""
+    df = _boosted_topk(spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    keys = re.findall(r"Aggregate \[([^\]]*)\]", plan)
+    assert keys, plan
+    assert not any("tlen#" in k for k in keys), keys
+    assert df.count() > 0
+
+
+def test_postings_sort_once_outside_lambdas(spark):
+    """The postings' sorted token array and tokenizer split are projected
+    columns: a lambda that captured either would re-sort or re-split the
+    array once per element."""
+    from kgner.operators.kbbuild import kb_index
+    from kgner.queries import QUERIES
+
+    for name, df in [
+        ("kb_index", kb_index(_kb_sents(spark))[0]),
+        ("bm25_topk", _boosted_topk(spark)),
+        ("bm25_entity_boost", QUERIES["bm25_entity_boost"](spark, SF)),
+    ]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert any("element_at" in b for b in bodies), name
+        for b in bodies:
+            assert not re.search(r"sort_array\(|array_sort\(|split\(", b), (name, b)
